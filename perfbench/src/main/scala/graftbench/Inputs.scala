@@ -26,6 +26,11 @@ object Inputs {
   /** Features per dataset (a third each points, lines, polygons). */
   val FeaturesPerDataset = 60
 
+  /** The seeded grid positions the features of a dataset cluster on,
+    * about 12 features each: a 2x2 km probe over a site returns
+    * objects, one elsewhere returns none. */
+  val Sites = 5
+
   /** East shift between consecutive replicas, metres. */
   val ReplicaShiftM = 20000L
 
@@ -38,15 +43,36 @@ object Inputs {
   private def rng(seed: Long, stream: Long): Random =
     new Random(seed * 1000003L + stream)
 
+  /** GeoFixture's grid: a key's position is key mod 713 (31 columns
+    * 2 km apart, 23 rows 3 km apart) and its geometry type key mod 3. */
+  val Positions = 713
+
+  /** The anchor point (SWEREF99 TM) of grid position `p` in replica `k`. */
+  def anchor(p: Int, k: Int): (Long, Long) =
+    (560000L + 2000L * (p % 31) + ReplicaShiftM * k, 6440000L + 3000L * ((7 * p) % 23))
+
+  /** The seeded grid positions the features cluster on. */
+  def sites(seed: Long): Vector[Int] =
+    rng(seed, 5L).shuffle((0 until Positions).toVector).take(Sites)
+
+  /** The anchors of every site in every replica. */
+  def siteAnchors(seed: Long): Vector[(Long, Long)] =
+    for (k <- Datasets.indices.toVector; p <- sites(seed)) yield anchor(p, k)
+
   /** A customer-shaped table (the columns GeoFixture reads) with
     * seeded distinct keys: the key decides the grid position and the
-    * geometry type of the derived feature. */
-  def customers(spark: SparkSession, seed: Long, stream: Long, n: Int): DataFrame = {
+    * geometry type of the derived feature. The i-th key gets type
+    * i % 3, so every seed has the same mix and only positions move. */
+  def customers(spark: SparkSession, seed: Long, stream: Long): DataFrame = {
     val r = rng(seed, stream)
-    // key % 3 picks the geometry type: the i-th key gets type i % 3, so
-    // every seed has the same mix and only positions move
-    val keys = Iterator.continually(r.nextInt(3333333).toLong).distinct.take(n)
-      .zipWithIndex.map { case (b, i) => 3L * b + i % 3 + 3L }.toVector
+    val on = sites(seed)
+    // key = position + 713 j (the j in 0..2 with the wanted type) + 2139 m
+    def key(p: Int, t: Int): Long = {
+      val j = (0 until 3).find(j => (p + Positions * j) % 3 == t).get
+      p + Positions * j + 3L * Positions * (1 + r.nextInt(1000000))
+    }
+    val keys = Iterator.from(0).map(i => key(on(r.nextInt(on.size)), i % 3))
+      .distinct.take(FeaturesPerDataset).toVector
     val segments = Vector("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
     val rows = keys.map { k =>
       Row(k, f"Customer#$k%09d", r.nextInt(25), segments(r.nextInt(segments.size)))
@@ -65,7 +91,7 @@ object Inputs {
   def writeSources(spark: SparkSession, dir: String, seed: Long): Seq[DatasetConfig] =
     Datasets.zipWithIndex.map { case ((id, pipeline), k) =>
       val custDir = s"$dir/customers_$id"
-      customers(spark, seed, 100L + k, FeaturesPerDataset).coalesce(1)
+      customers(spark, seed, 100L + k).coalesce(1)
         .write.mode("overwrite").parquet(s"$custDir/customer.parquet")
       val src = s"$dir/$id.parquet"
       GeoFixture(spark, custDir, eastOffset = ReplicaShiftM * k,
@@ -94,64 +120,81 @@ object Inputs {
   case object FreshHeatmap extends ProbeKind
   case object FreshExact extends ProbeKind
 
-  final case class Probe(kind: ProbeKind, wkt: String)
+  /** One probe: its kind, its polygon, and the polygon's shape
+    * (`2km`, `10km` or `concave`). */
+  final case class Probe(kind: ProbeKind, wkt: String, shape: String)
+
+  val ShapeNames: Vector[String] = Vector("2km", "10km", "concave")
+
+  /** A point to place a query shape at: with probability `near` a
+    * seeded site anchor moved by up to `jitter` metres south-west (so
+    * a shape at least `jitter` wide covers the site), else a uniform
+    * point of the fixture box leaving room for a `room`-metre shape. */
+  private def place(r: Random, anchors: Vector[(Long, Long)], near: Double,
+      jitter: Int, room: Long): (Long, Long) =
+    if (anchors.nonEmpty && r.nextDouble() < near) {
+      val (x, y) = anchors(r.nextInt(anchors.size))
+      (x - 100 - r.nextInt(jitter - 200), y - 100 - r.nextInt(jitter - 200))
+    } else
+      (BoxW + (r.nextDouble() * (BoxE - BoxW - room)).toLong,
+        BoxS + (r.nextDouble() * (BoxN - BoxS - room)).toLong)
 
   /** The probe schedule, in blocks of twenty with a fixed mix, so every
     * seed and every stretch of the schedule asks the same kinds of
     * question and only the placement moves. Per block: 14 probes go
-    * through the prepared handle and two each are freshly planned
-    * stats, heatmap and exact-objects queries; 14 polygons are 2x2 km
-    * squares, 3 are 10x10 km squares and 3 are 3 km concave shapes,
-    * placed uniformly over the fixture box (some land empty, some
-    * dense); 4 of the 20 revisit an earlier polygon of the same shape. */
-  def probes(seed: Long, n: Int): Vector[Probe] = {
+    * through the prepared handle (8 on 2x2 km squares, 3 on 10x10 km
+    * squares, 3 on 3 km concave shapes) and two each are freshly
+    * planned stats, heatmap and exact-objects queries on 2x2 km
+    * squares, so the fresh-plan latency does not swing with the shapes
+    * a block happens to pair with it.
+    * 70% of the new 2 km squares and half of the concave shapes cover
+    * a site of the warehouse (dense); the rest and the 10 km squares
+    * land uniformly over the fixture box (mostly empty, or a site);
+    * 4 of the 20 revisit an earlier polygon of the same shape. */
+  def probes(seed: Long, n: Int, anchors: Vector[(Long, Long)]): Vector[Probe] = {
     val r = rng(seed, 7L)
     val made = Array.fill(3)(Vector.empty[String])
     def polygon(shape: Int, revisit: Boolean): String =
       if (revisit && made(shape).nonEmpty) made(shape)(r.nextInt(made(shape).size))
       else {
-        val x = BoxW + (r.nextDouble() * (BoxE - BoxW - 10000)).toLong
-        val y = BoxS + (r.nextDouble() * (BoxN - BoxS - 10000)).toLong
         val w = shape match {
-          case 0 => square(x, y, 2000)
-          case 1 => square(x, y, 10000)
-          case _ => concave(x, y, 3000)
+          case 0 => val (x, y) = place(r, anchors, 0.7, 2000, 2000); square(x, y, 2000)
+          case 1 => val (x, y) = place(r, anchors, 0.0, 0, 10000); square(x, y, 10000)
+          case _ => val (x, y) = place(r, anchors, 0.5, 1000, 3000); concave(x, y, 3000)
         }
         made(shape) :+= w
         w
       }
-    val kinds = Vector.fill(14)(Prepared) ++
-      Vector(FreshStats, FreshHeatmap, FreshExact).flatMap(k => Vector(k, k))
-    val shapes = Vector.fill(14)(0) ++ Vector.fill(3)(1) ++ Vector.fill(3)(2)
+    val fresh = Vector(FreshStats, FreshHeatmap, FreshExact).flatMap(k => Vector(k -> 0, k -> 0))
+    val prepared = (Vector.fill(8)(0) ++ Vector.fill(3)(1) ++ Vector.fill(3)(2)).map(Prepared -> _)
     val revisits = Vector.fill(4)(true) ++ Vector.fill(16)(false)
     Vector.fill((n + 19) / 20) {
-      r.shuffle(kinds).zip(r.shuffle(shapes)).zip(r.shuffle(revisits))
-        .map { case ((k, sh), rv) => Probe(k, polygon(sh, rv)) }
+      r.shuffle(prepared ++ fresh).zip(r.shuffle(revisits))
+        .map { case ((k, sh), rv) => Probe(k, polygon(sh, rv), ShapeNames(sh)) }
     }.flatten.take(n)
   }
 
-  /** The start of the set-up's warm-up: every probe kind on every
-    * shape, so no plan is compiled for the first time inside the timed
-    * window. */
-  def warmupProbes(seed: Long): Vector[Probe] = {
+  /** The set-up's warm-up: every probe kind on one 2 km square over a
+    * site, so no plan is compiled for the first time inside the timed
+    * window (the plans do not depend on the polygon's shape), then 40
+    * prepared probes of another schedule: the prepared path keeps
+    * getting faster over its first few dozen calls in a fresh JVM. */
+  def warmupProbes(seed: Long, anchors: Vector[(Long, Long)]): Vector[Probe] = {
     val r = rng(seed, 9L)
-    val x = BoxW + (r.nextDouble() * (BoxE - BoxW - 10000)).toLong
-    val y = BoxS + (r.nextDouble() * (BoxN - BoxS - 10000)).toLong
-    for {
-      w <- Vector(square(x, y, 2000), square(x, y, 10000), concave(x, y, 3000))
-      k <- Vector(Prepared, FreshStats, FreshHeatmap, FreshExact)
-    } yield Probe(k, w)
+    val (x, y) = place(r, anchors, 1.0, 2000, 2000)
+    Vector(Prepared, FreshStats, FreshHeatmap, FreshExact).map(Probe(_, square(x, y, 2000), "2km")) ++
+      probes(seed + 1, 60, anchors).filter(_.kind == Prepared).take(40)
   }
 
   /** The spatial_join geometry table: seeded points, short lines and
-    * small polygons placed on the fixture's position grid (so most
-    * touch a feature and some miss), as WKT with an id. */
-  def joinGeoms(seed: Long, n: Int): Vector[(Long, String)] = {
+    * small polygons near the warehouse's sites (so most touch a
+    * feature and some miss), as WKT with an id. */
+  def joinGeoms(seed: Long, n: Int, anchors: Vector[(Long, Long)]): Vector[(Long, String)] = {
     val r = rng(seed, 11L)
     (0 until n).map { i =>
-      val x = 560000L + 2000L * r.nextInt(31) + ReplicaShiftM * r.nextInt(Datasets.size) +
-        r.nextInt(1500) - 300
-      val y = 6440000L + 3000L * r.nextInt(23) + r.nextInt(1200) - 300
+      val (ax, ay) = anchors(r.nextInt(anchors.size))
+      val x = ax + r.nextInt(1500) - 300
+      val y = ay + r.nextInt(1200) - 300
       val wkt = i % 3 match {
         case 0 => s"POINT ($x $y)"
         case 1 => s"LINESTRING ($x $y, ${x + 400 + r.nextInt(1200)} ${y + r.nextInt(900)})"
@@ -161,13 +204,13 @@ object Inputs {
     }.toVector
   }
 
-  /** Literal-polygon filters for the spatial_join SQL filter queries. */
-  def filterPolygons(seed: Long, n: Int): Vector[String] = {
+  /** Literal-polygon filters for the spatial_join SQL filter queries:
+    * half over a site, half uniform. */
+  def filterPolygons(seed: Long, n: Int, anchors: Vector[(Long, Long)]): Vector[String] = {
     val r = rng(seed, 13L)
     Vector.fill(n) {
-      val x = BoxW + (r.nextDouble() * (BoxE - BoxW - 4000)).toLong
-      val y = BoxS + (r.nextDouble() * (BoxN - BoxS - 4000)).toLong
-      if (r.nextBoolean()) square(x, y, 2000) else concave(x, y, 3000)
+      if (r.nextBoolean()) { val (x, y) = place(r, anchors, 0.5, 2000, 2000); square(x, y, 2000) }
+      else { val (x, y) = place(r, anchors, 0.5, 1000, 3000); concave(x, y, 3000) }
     }
   }
 

@@ -26,10 +26,16 @@ object Stats {
   * Usage: graftbench.Main --workload <name> --seed <n> --seconds <s>
   *   --trace <0|1> --work <dir> */
 object Main {
-  /** Set-up repetitions per run (a cold one, then a warm one);
-    * `setup_s` is their median. Each costs a warehouse build; two keep
-    * a run under a minute. */
+  /** Set-up repetitions per run: a cold one, which also warms the JIT
+    * and loads the classes, then warm ones; `setup_s` is the median of
+    * the warm ones. One warm repetition keeps a run near a minute on a
+    * 4-core machine (see README.md). */
   val SetupReps = 2
+
+  /** Whole cycles a window holds at least, so that every metric of a
+    * run is a median over several ops of each kind, and a slow first
+    * cycle cannot be the median. */
+  val MinCycles = 3
 
   final case class Sample(kind: Kind, ms: Double, startMs: Long, endMs: Long, ok: Boolean)
 
@@ -44,33 +50,40 @@ object Main {
   }
 
   /** The closed loop: the next op starts only when the previous one
-    * finished; whole cycles start until `seconds` have passed. */
-  def measure(c: Ctx, w: Workload, seconds: Double): Window = {
+    * finished; whole cycles start until `seconds` have passed and at
+    * least `minCycles` have run. */
+  def measure(c: Ctx, w: Workload, seconds: Double, minCycles: Int): Window = {
     val guard = new JobMeter(withTasks = false)
     c.spark.sparkContext.addSparkListener(guard)
     val cycles = w.cycles
     val out = mutable.ArrayBuffer[Sample]()
     val t0 = System.nanoTime()
     def elapsed = (System.nanoTime() - t0) / 1e9
-    while (elapsed < seconds) cycles.next().foreach { op =>
-      val s = System.currentTimeMillis()
-      val a = System.nanoTime()
-      val ok = try { op.run(); true } catch {
-        case NonFatal(e) =>
-          System.err.println(s"[perfbench] op failed: $e")
-          false
+    var n = 0
+    while (elapsed < seconds || n < minCycles) {
+      n += 1
+      cycles.next().foreach { op =>
+        val s = System.currentTimeMillis()
+        val a = System.nanoTime()
+        val ok = try { op.run(); true } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[perfbench] op failed: $e")
+            false
+        }
+        out += Sample(op.kind, (System.nanoTime() - a) / 1e6, s, System.currentTimeMillis(), ok)
       }
-      out += Sample(op.kind, (System.nanoTime() - a) / 1e6, s, System.currentTimeMillis(), ok)
     }
     val wall = elapsed
     Bus.drain(c.spark.sparkContext)
     c.spark.sparkContext.removeSparkListener(guard)
-    // an op whose stages were all skipped reused an earlier shuffle:
-    // it did not do the work it is timed for, so it is an error
+    // an op that read a shuffle it did not write reused an earlier op's
+    // output (its stage was skipped): it did not do the work it is
+    // timed for, so it is an error; every op builds new Datasets, so
+    // none should
     val checked = out.toSeq.map { s =>
       val g = guard.window(s.startMs, s.endMs)
-      if (s.ok && g.jobs > 0 && g.stagesRun == 0) {
-        System.err.println(s"[perfbench] op at ${s.startMs} ran only skipped stages")
+      if (s.ok && g.reused > 0) {
+        System.err.println(s"[perfbench] op at ${s.startMs} reused ${g.reused} of ${g.shuffles} shuffles")
         s.copy(ok = false)
       } else s
     }
@@ -113,24 +126,35 @@ object Main {
       (System.nanoTime() - t0) / 1e9
     }
     System.err.println(f"[perfbench] $name set-up reps (s): ${setups.map(x => f"$x%.2f").mkString(" ")}")
-    // a traced run splits its window: half untraced, half traced
-    val win = measure(c, w, if (traced) seconds / 2 else seconds)
+    // a traced run splits its window, half untraced and half traced,
+    // and needs no steady medians from it, so a half may be one cycle
+    val minCycles = if (traced) 1 else MinCycles
+    val win = measure(c, w, if (traced) seconds / 2 else seconds, minCycles)
     System.err.println(f"[perfbench] $name window: ${win.samples.size} ops in ${win.wallS}%.1f s; " +
       win.samples.map(s => f"${if (s.kind == MainOp) "m" else "s"}${s.ms}%.0f").mkString(" "))
-    val checks = w.gate()
-    checks.filterNot(_._2).foreach(f => System.err.println(s"[perfbench] gate failed: ${f._1}"))
 
     val metrics = mutable.LinkedHashMap[String, (Double, String)]()
-    var attempted = win.samples.size + checks.size
-    var failed = win.samples.count(!_.ok) + checks.count(!_._2)
+    var attempted = win.samples.size
+    var failed = win.samples.count(!_.ok)
+    // a workload's correctness gate: every check counts as attempted,
+    // every failed check (or a gate that throws) as failed
+    def gate(n: String, wl: Workload): Unit = {
+      val checks = try wl.gate() catch {
+        case NonFatal(e) => Seq(s"$n: gate finished ($e)" -> false)
+      }
+      checks.filterNot(_._2).foreach(f => System.err.println(s"[perfbench] gate failed: ${f._1}"))
+      attempted += checks.size
+      failed += checks.count(!_._2)
+    }
     if (!traced) {
-      metrics("setup_s") = (Stats.quantile(setups, 0.5), "s")
+      gate(name, w)
+      metrics("setup_s") = (Stats.quantile(setups.drop(1), 0.5), "s")
       win.e2e.foreach { case (k, v, u) => metrics(k) = (v, u) }
     } else {
       // the same window again with the collectors attached: the
       // difference is the tracing overhead
       val t = new Tracer(spark)
-      val tw = measure(c, w, seconds / 2)
+      val tw = measure(c, w, seconds / 2, minCycles)
       attempted += tw.samples.size
       failed += tw.samples.count(!_.ok)
       win.e2e.zip(tw.e2e).foreach { case ((k, u0, unit), (_, t0, _)) =>
@@ -139,12 +163,17 @@ object Main {
       val layer = mutable.LinkedHashMap[String, Double]()
       Workload.Names.foreach { n =>
         val wl = if (n == name) w else Workload(n, c)
+        val t0 = System.nanoTime()
         try wl.trace(t, layer) catch {
           case NonFatal(e) =>
             System.err.println(s"[perfbench] traced pass of $n failed: $e")
             failed += 1
         }
         attempted += 1
+        val t1 = System.nanoTime()
+        gate(n, wl)
+        System.err.println(f"[perfbench] $n traced pass ${(t1 - t0) / 1e9}%.1f s, " +
+          f"gate ${(System.nanoTime() - t1) / 1e9}%.1f s")
       }
       t.detach()
       layer.foreach { case (k, v) => metrics(k) = (v, TraceUnits.of(k)) }

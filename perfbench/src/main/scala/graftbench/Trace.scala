@@ -1,6 +1,7 @@
 package graftbench
 
 import org.apache.spark.SparkContext
+import org.apache.spark.graftbench.SparkAccess
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
@@ -21,24 +22,31 @@ import scala.jdk.CollectionConverters._
   * overlap.
   *
   * `withTasks = false` is the validity guard every run carries: it
-  * only sees job and stage submissions, so a timed op whose stages
-  * were all skipped (served from an earlier shuffle) can be counted as
-  * an error. `withTasks = true` adds task metrics for the traced run. */
+  * only sees job starts (with the shuffles each job reads) and stage
+  * submissions (with the shuffle each writes), so a timed op that read
+  * a shuffle it did not write itself (an earlier op's output, its
+  * stage skipped) can be counted as an error. Shuffles, not stage ids,
+  * identify the work: adaptive execution runs a query's map stages as
+  * jobs of their own, and the query's last job then lists the same
+  * shuffles under new, skipped stage ids. `withTasks = true` adds task
+  * metrics for the traced run. */
 final class JobMeter(withTasks: Boolean) extends SparkListener {
-  final case class Job(id: Int, timeMs: Long)
+  /** A job and the shuffles its stages write or read. */
+  final case class Job(id: Int, timeMs: Long, shuffles: Seq[Int])
   final case class Task(stageId: Int, cpuNs: Long, shuffleBytes: Long,
       spillBytes: Long, recordsRead: Long)
 
   private val jobs = new ConcurrentLinkedQueue[Job]()
-  private val submitted = new ConcurrentLinkedQueue[(Int, Long)]()
+  /** (stage id, shuffle it writes, submission time) */
+  private val submitted = new ConcurrentLinkedQueue[(Int, Option[Int], Long)]()
   private val tasks = new ConcurrentLinkedQueue[Task]()
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
-    jobs.add(Job(e.jobId, e.time))
+    jobs.add(Job(e.jobId, e.time, e.stageInfos.flatMap(SparkAccess.shuffleOf)))
 
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-    submitted.add(e.stageInfo.stageId ->
-      e.stageInfo.submissionTime.getOrElse(System.currentTimeMillis()))
+    submitted.add((e.stageInfo.stageId, SparkAccess.shuffleOf(e.stageInfo),
+      e.stageInfo.submissionTime.getOrElse(System.currentTimeMillis())))
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
     if (withTasks && e.taskMetrics != null) {
@@ -48,16 +56,21 @@ final class JobMeter(withTasks: Boolean) extends SparkListener {
         m.memoryBytesSpilled + m.diskBytesSpilled, m.inputMetrics.recordsRead))
     }
 
-  final case class Window(jobs: Int, stagesRun: Int, tasks: Int, cpuS: Double,
-      shuffleMb: Double, spillMb: Double, recordsRead: Long)
+  /** `shuffles` counts the distinct shuffles the window's jobs use,
+    * `reused` those of them no stage of the window wrote. */
+  final case class Window(jobs: Int, shuffles: Int, reused: Int, tasks: Int,
+      cpuS: Double, shuffleMb: Double, spillMb: Double, recordsRead: Long)
 
   /** Everything submitted in [startMs, endMs]. */
   def window(startMs: Long, endMs: Long): Window = {
     def in(t: Long) = t >= startMs && t <= endMs
     val js = jobs.asScala.filter(j => in(j.timeMs)).toSeq
-    val run = submitted.asScala.filter(s => in(s._2)).map(_._1).toSet
+    val ss = submitted.asScala.filter(s => in(s._3)).toSeq
+    val run = ss.map(_._1).toSet
+    val written = ss.flatMap(_._2).toSet
+    val used = js.flatMap(_.shuffles).toSet
     val ts = tasks.asScala.filter(t => run.contains(t.stageId)).toSeq
-    Window(js.size, run.size, ts.size,
+    Window(js.size, used.size, used.count(!written.contains(_)), ts.size,
       ts.map(_.cpuNs).sum / 1e9, ts.map(_.shuffleBytes).sum / 1048576.0,
       ts.map(_.spillBytes).sum / 1048576.0, ts.map(_.recordsRead).sum)
   }
@@ -147,5 +160,5 @@ final class Tracer(spark: SparkSession) {
 
 object Bus {
   /** Wait until every posted listener event has been delivered. */
-  def drain(sc: SparkContext): Unit = org.apache.spark.graftbench.BusAccess.drain(sc)
+  def drain(sc: SparkContext): Unit = SparkAccess.drain(sc)
 }

@@ -106,22 +106,12 @@ final class Warehouse(c: Ctx) {
     r
   }
 
-  /** Only the index marts, through the stages the Runner chains
-    * (stage004 -> normalize -> mart -> clustered write) but without
-    * its intermediate tables: the warehouse the query workloads read. */
-  def writeIndex(out: String): Unit = configs.foreach { d =>
-    val staged = Stages.stage004(registry(d.plugin).read(spark, Map("url" -> d.url)), d.h3)
-    val normalized = if (d.pipeline == "avdelning")
-      Stages.normalizeAvdelning(staged, d.fieldMapping, d.datasetId)
-    else Stages.normalizeExtRestr(staged, d.fieldMapping, d.datasetId)
-    H3Index.writeClustered(Stages.martH3Cells(normalized, d.datasetId),
-      s"$out/mart/${d.datasetId}_h3.parquet")
-  }
-
   def marts(out: String, suffix: String): Map[String, DataFrame] =
     configs.map(d => d.datasetId ->
       spark.read.parquet(s"$out/mart/${d.datasetId}$suffix.parquet")).toMap
 
+  /** The merged index over a build's marts, as Runner.run defines its
+    * `h3_index` view. */
   def index(out: String): DataFrame = H3Index.build(spark, marts(out, "_h3"))
 
   /** Order-independent digest of one build: index rows, stats rows,
@@ -142,7 +132,8 @@ final class Warehouse(c: Ctx) {
   * sources; each side op exports the latest build's compact marts. */
 final class EtlBuild(c: Ctx) extends Workload {
   private val wh = new Warehouse(c)
-  private var reference: (Long, Long, BigDecimal) = _
+  /** Every build of the current set-up, the set-up's own first: the
+    * gate checks that they all equal it. */
   private val builds = mutable.ArrayBuffer[String]()
   private val exports = mutable.ArrayBuffer[Map[String, Seq[String]]]()
   private var last: String = _
@@ -153,30 +144,31 @@ final class EtlBuild(c: Ctx) extends Workload {
     wh.writeSources()
     last = c.fresh("build")
     wh.build(last)
-    reference = wh.digest(last)
-    System.err.println(s"[perfbench] etl_build index rows ${reference._1}, stats rows ${reference._2}")
     builds += last
   }
 
-  /** A build, then two exports of it. */
+  /** A build, then exports of it. */
   def cycles: Iterator[Seq[Op]] = {
     val export = Op(SideOp, () => {
       val dest = c.fresh("export")
       exports += wh.export(last, dest)
       c.rm(dest)
     })
-    Iterator.continually(Seq(Op(MainOp, () => {
+    Iterator.continually(Op(MainOp, () => {
       val out = c.fresh("build")
       builds += out
       wh.build(out)
       last = out
-    }), export, export))
+    }) +: Seq.fill(EtlBuild.ExportsPerBuild)(export))
   }
 
   def gate(): Seq[(String, Boolean)] = {
-    val digests = builds.toSeq.map(b => (b, wh.digest(b)))
-    val perBuild = digests.map { case (b, d) =>
-      s"etl_build: digest of ${new File(b).getName} equals the set-up build" -> (d == reference)
+    require(builds.nonEmpty, "etl_build: nothing was built")
+    val digests = builds.toSeq.map(wh.digest)
+    val reference = digests.head
+    System.err.println(s"[perfbench] etl_build index rows ${reference._1}, stats rows ${reference._2}")
+    val perBuild = builds.toSeq.zip(digests).tail.map { case (b, d) =>
+      s"etl_build: digest of ${new File(b).getName} equals the first build" -> (d == reference)
     }
     val exported = exports.toSeq.map(e =>
       "etl_build: every compact mart exported as parquet" ->
@@ -236,6 +228,8 @@ final class EtlBuild(c: Ctx) extends Workload {
     out("sinks.export_mb") = c.bytesUnder(dest) / 1048576.0
     val runnerOut = c.fresh("trace_runner")
     t.span("pipeline.runner") { wh.build(runnerOut) }
+    builds += runnerOut
+    c.warehouse = Some((wh, runnerOut))
     val stages = Seq("sources.extract", "pipeline.stage004", "pipeline.normalize",
       "pipeline.mart", "pipeline.compact", "pipeline.index_stats")
     Seq(stages :+ "sinks.export" :+ "pipeline.runner": _*)
@@ -244,8 +238,12 @@ final class EtlBuild(c: Ctx) extends Workload {
       out("pipeline.runner.wall_s") - stages.map(s => out(s"$s.wall_s")).sum
     out("pipeline.parallel_efficiency") =
       out("pipeline.runner.exec_cpu_s") / (out("pipeline.runner.wall_s") * c.cores)
-    Seq(dir, dest, runnerOut).foreach(c.rm)
+    Seq(dir, dest).foreach(c.rm)
   }
+}
+
+object EtlBuild {
+  val ExportsPerBuild = 2
 }
 
 /** polygon_probe: polygon queries against the warehouse built in
@@ -254,10 +252,13 @@ final class EtlBuild(c: Ctx) extends Workload {
 final class PolygonProbe(c: Ctx) extends Workload {
   import c.spark
   private val wh = new Warehouse(c)
+  private val anchors = Inputs.siteAnchors(c.seed)
   private var out: String = _
   private var index: DataFrame = _
   private var handle: PreparedPolygonQuery = _
-  private val probes = Inputs.probes(c.seed, 20000)
+  private val probes = Inputs.probes(c.seed, 20000, anchors)
+  /** Rows each prepared probe of the window returned, by shape. */
+  private val results = mutable.ArrayBuffer[(String, Long)]()
 
   def setup(): Unit = {
     if (out != null) c.rm(out)
@@ -265,16 +266,20 @@ final class PolygonProbe(c: Ctx) extends Workload {
     wh.writeSources()
     val t1 = System.nanoTime()
     out = c.fresh("warehouse")
-    wh.writeIndex(out)
+    wh.build(out)
     c.warehouse = Some((wh, out))
-    index = wh.index(out)
     val t2 = System.nanoTime()
-    handle = PreparedPolygonQuery(index)
+    open(wh, out)
     val t3 = System.nanoTime()
-    (Inputs.warmupProbes(c.seed) ++ Inputs.probes(c.seed + 1, 12)).foreach(run)
-    val t4 = System.nanoTime()
-    System.err.println(Seq(t0, t1, t2, t3, t4).sliding(2).map(p => f"${(p(1) - p(0)) / 1e9}%.2f")
-      .mkString("[perfbench] polygon_probe set-up sources/index/handle/warm-up (s): ", " ", ""))
+    System.err.println(Seq(t0, t1, t2, t3).sliding(2).map(p => f"${(p(1) - p(0)) / 1e9}%.2f")
+      .mkString("[perfbench] polygon_probe set-up sources/build/handle+warm-up (s): ", " ", ""))
+  }
+
+  /** The prepared handle over a built warehouse, warmed up. */
+  private def open(w: Warehouse, dir: String): Unit = {
+    index = w.index(dir)
+    handle = PreparedPolygonQuery(index)
+    Inputs.warmupProbes(c.seed, anchors).foreach(run)
   }
 
   private def run(p: Inputs.Probe): Long = p.kind match {
@@ -286,27 +291,49 @@ final class PolygonProbe(c: Ctx) extends Workload {
 
   /** Blocks of twenty probes, each with the schedule's fixed mix. */
   def cycles: Iterator[Seq[Op]] = Iterator.continually(probes).flatten.map { p =>
-    Op(if (p.kind == Inputs.Prepared) MainOp else SideOp, () => run(p))
+    if (p.kind == Inputs.Prepared) Op(MainOp, () => results += (p.shape -> run(p)))
+    else Op(SideOp, () => run(p))
   }.grouped(20)
 
+  private def ids(rows: Array[Row]): Seq[(String, String)] =
+    rows.map(x => (x.getString(0), x.getString(1))).toSeq
+
+  /** Prepared results equal H3Query.objects on seeded polygons of the
+    * schedule: the first four for which the handle returns objects and
+    * the first for which it returns none. */
   def gate(): Seq[(String, Boolean)] = {
-    val r = new scala.util.Random(c.seed)
-    r.shuffle(probes.map(_.wkt).distinct).take(4).map { wkt =>
-      val got = handle.objects(wkt).map(x => (x.getString(0), x.getString(1))).toSeq
-      val want = H3Query.objects(spark, index, wkt).collect()
-        .map(x => (x.getString(0), x.getString(1))).toSeq
-      "polygon_probe: prepared objects equal H3Query.objects" -> (got == want)
+    results.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (shape, rs) =>
+      val n = rs.map(_._2.toDouble).toSeq
+      System.err.println(f"[perfbench] polygon_probe prepared $shape: ${n.size} probes, " +
+        f"${n.count(_ == 0) * 100.0 / n.size}%.0f%% empty, rows p50 ${Stats.quantile(n, 0.5)}%.0f " +
+        f"p90 ${Stats.quantile(n, 0.9)}%.0f max ${n.max}%.0f")
     }
+    val r = new scala.util.Random(c.seed)
+    val hits = mutable.ArrayBuffer[(String, Seq[(String, String)])]()
+    val misses = mutable.ArrayBuffer[(String, Seq[(String, String)])]()
+    r.shuffle(probes.map(_.wkt).distinct).iterator.take(60)
+      .takeWhile(_ => hits.size < 4 || misses.isEmpty).foreach { wkt =>
+        val got = ids(handle.objects(wkt))
+        if (got.nonEmpty && hits.size < 4) hits += wkt -> got
+        else if (got.isEmpty && misses.isEmpty) misses += wkt -> got
+      }
+    (hits ++ misses).toSeq.map { case (wkt, got) =>
+      "polygon_probe: prepared objects equal H3Query.objects" ->
+        (got == ids(H3Query.objects(spark, index, wkt).collect()))
+    } :+ ("polygon_probe: four gate polygons return objects" -> (hits.size == 4))
   }
 
   def trace(t: Tracer, m: mutable.Map[String, Double]): Unit = {
-    if (handle == null) setup()
-    val sample = probes.take(60)
+    if (handle == null) c.warehouse match {
+      case Some((w, dir)) => open(w, dir)
+      case None => setup()
+    }
+    val sample = probes.take(40)
     var rows = 0L
-    sample.filter(_.kind == Inputs.Prepared).take(30).foreach { p =>
+    sample.filter(_.kind == Inputs.Prepared).take(20).foreach { p =>
       rows += t.span("pipeline.probe_prepared")(run(p))
     }
-    sample.filter(_.kind != Inputs.Prepared).take(12).foreach { p =>
+    sample.filter(_.kind != Inputs.Prepared).take(4).foreach { p =>
       rows += t.span("pipeline.probe_fresh")(run(p))
     }
     Seq("pipeline.probe_prepared", "pipeline.probe_fresh")
@@ -337,8 +364,9 @@ final class SpatialJoin(c: Ctx) extends Workload {
   import c.spark
   private val wh = new Warehouse(c)
   private var out: String = _
-  private val geoms = Inputs.joinGeoms(c.seed, SpatialJoin.Geometries)
-  private val filters = Inputs.filterPolygons(c.seed, 400)
+  private val anchors = Inputs.siteAnchors(c.seed)
+  private val geoms = Inputs.joinGeoms(c.seed, SpatialJoin.Geometries, anchors)
+  private val filters = Inputs.filterPolygons(c.seed, 400, anchors)
 
   private def rulesOn(on: Boolean): Unit = Seq(
     "spark.graft.h3Join.res", "spark.graft.h3Filter.res").foreach { k =>
@@ -354,7 +382,7 @@ final class SpatialJoin(c: Ctx) extends Workload {
     if (out != null) c.rm(out)
     wh.writeSources()
     out = c.fresh("warehouse")
-    wh.writeIndex(out)
+    wh.build(out)
     open(wh, out)
     joinPair("bench_geoms")
     filter(filters.last)
@@ -363,7 +391,7 @@ final class SpatialJoin(c: Ctx) extends Workload {
   private def open(w: Warehouse, dir: String): Unit = {
     w.index(dir).createOrReplaceTempView("h3_index")
     view("bench_geoms", geoms)
-    view("bench_geoms_gate", geoms.take(12))
+    view("bench_geoms_gate", geoms.take(6))
     rulesOn(true)
   }
 
@@ -402,7 +430,7 @@ final class SpatialJoin(c: Ctx) extends Workload {
       case None => setup()
     }
     t.span("plans.spatial_join")(joinPair("bench_geoms"))
-    filters.take(10).foreach(f => t.span("plans.sql_filter")(filter(f)))
+    filters.take(6).foreach(f => t.span("plans.sql_filter")(filter(f)))
     Seq("plans.spatial_join", "plans.sql_filter").foreach(Workload.spanCounters(t, _, m))
     def queries(span: String) = t.spansNamed(span).flatMap(s => t.plans.window(s.startMs, s.endMs))
     val joins = queries("plans.spatial_join")
@@ -511,7 +539,7 @@ final class CorpusDedup(c: Ctx) extends Workload {
 }
 
 object CorpusDedup {
-  val BaseDocs = 1200
-  val Batch = 60
+  val BaseDocs = 600
+  val Batch = 30
   val Tau = 0.8
 }
