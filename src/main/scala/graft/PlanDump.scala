@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** r19 optimization round: dumps `.explain("formatted")` for the plan
   * shapes the round touched, so plans/r19/<query>_{before,after}.txt
@@ -13,12 +14,11 @@ import org.apache.spark.sql.functions._
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // a dump is the whole plan: lift the engine's plan-string render cap
+    val spark = Sessions.localBuilder("graft-plan-dump", cpus)
+      .config("spark.sql.maxPlanStringLength",
+        ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val out = dump(spark, sfDir, args.headOption.getOrElse(""))

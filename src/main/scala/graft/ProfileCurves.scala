@@ -23,14 +23,7 @@ import org.apache.spark.sql.functions._
 object ProfileCurves {
   def session(name: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.localBuilder(name, cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.GFunctions._
 
@@ -11,12 +10,8 @@ import graft.functions.GFunctions._
 object ProfileStage {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Sessions.localBuilder("graft-profile", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val fx = graft.pipeline.GeoFixture(spark, sfDir)

@@ -91,14 +91,18 @@ object H3Index {
     * ships as the default, not as a profiler artifact. Partition
     * count comes from spark.sql.shuffle.partitions (AQE coalesces
     * small outputs), so the same call scales from a 150-row test
-    * fixture to a multi-TB mart. */
+    * fixture to a multi-TB mart.
+    *
+    * Returns the schema it wrote, so a caller can read the table back
+    * with `spark.read.schema(...)` and skip parquet schema inference. */
   def writeClustered(df: DataFrame, path: String,
-      res: Int = H3Query.DefaultQueryRes, coarseLevels: Int = 2): Unit = {
+      res: Int = H3Query.DefaultQueryRes, coarseLevels: Int = 2): StructType = {
     val parentCol = s"h3_parent_$res"
-    withParentsAt(df, ((res - coarseLevels).max(0) to res))
+    val clustered = withParentsAt(df, ((res - coarseLevels).max(0) to res))
       .repartitionByRange(col(parentCol))
       .sortWithinPartitions(parentCol)
-      .write.mode("overwrite").option("compression", "zstd").parquet(path)
+    clustered.write.mode("overwrite").option("compression", "zstd").parquet(path)
+    clustered.schema
   }
 
   /** mart.h3_stats (pipeline_runner.py:1144-1153): per-cell heatmap

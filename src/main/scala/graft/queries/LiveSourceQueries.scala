@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import graft.config.DatasetConfig
 import graft.functions.GFunctions._
 import graft.pipeline.{GeoFixture, Ledger, Runner}
@@ -81,7 +83,10 @@ object LiveSourceQueries {
   def stopServers(): Unit = {
     val it = servers.values().iterator()
     while (it.hasNext) {
-      try it.next()._2.stop(0) catch { case _: Throwable => () }
+      val (url, server) = it.next()
+      try server.stop(0) catch {
+        case NonFatal(t) => System.err.println(s"[graft] stopping test server $url failed: $t")
+      }
     }
     servers.clear()
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 /** Lifecycle registry for the battery's persisted intermediates.
   *
@@ -71,7 +72,7 @@ object Memos {
       history.put(key, consumers)
       entries.get(key).foreach { old =>
         val same = (token ne null) && (old.token ne null) && (old.token eq token)
-        if (!same) { try old.release() catch { case _: Throwable => () } }
+        if (!same) releaseLogged(key, old)
       }
       entries.put(key, Entry(consumers, release, token))
       // late registration: if the battery has already passed every
@@ -104,13 +105,20 @@ object Memos {
     remaining = None
   }
 
+  /** Run an entry's release thunk; a non-fatal failure is reported on
+    * stderr and does not stop the other releases. */
+  private def releaseLogged(key: String, e: Entry): Unit =
+    try e.release() catch {
+      case NonFatal(t) => System.err.println(s"[graft] memo release of $key failed: $t")
+    }
+
   private def sweep(): Boolean = remaining match {
     case None => false
     case Some(r) =>
       val dead = entries.filter { case (_, e) => e.consumers.forall(!r(_)) }
       dead.foreach { case (k, e) =>
         entries.remove(k)
-        try e.release() catch { case _: Throwable => () }
+        releaseLogged(k, e)
       }
       dead.nonEmpty
   }

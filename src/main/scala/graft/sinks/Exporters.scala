@@ -200,7 +200,9 @@ object Exporters {
     * dispatch — skip empty tables, skip tables with >1 geometry column,
     * synthesize geometry from `h3_cell` when absent, CSV for H3-only
     * tables, GeoJSON-seq + ZSTD parquet when geometry exists. Returns
-    * (table -> formats written). */
+    * (table -> formats written). The parquet is written first and its
+    * footers say whether the table is empty (then the parquet is
+    * deleted again), so emptiness costs no Spark job of its own. */
   def exportMartTables(tables: Map[String, DataFrame], outDir: String)
       : Map[String, Seq[String]] = {
     tables.flatMap { case (name, df0) =>
@@ -208,8 +210,6 @@ object Exporters {
         .filter(_.dataType == BinaryType).map(_.name)
       if (geomCols.length > 1) {
         Some(name -> Seq("skipped:multiple-geometry-columns"))
-      } else if (df0.isEmpty) {
-        Some(name -> Seq("skipped:empty"))
       } else {
         // Synthesize geometry from the internal (possibly long-keyed)
         // cell id FIRST, then hex-convert: every export format ships
@@ -224,22 +224,29 @@ object Exporters {
           if (cellIsLong) d.withColumn("h3_cell", h3_hex(col("h3_cell"))) else d
         val df = hexed(withGeom)
         val dfFlat = hexed(df0)
-        val written = scala.collection.mutable.ArrayBuffer[String]()
-        parquetZstd(dfFlat, s"$outDir/$name.parquet")
-        written += "parquet"
-        if (df.columns.contains("geom")) {
-          geojsonSeq(df, s"$outDir/$name.geojsonl")
-          written += "geojsonl"
-          GeopackageWriter.write(df, s"$outDir/$name.gpkg", name)
-          written += "gpkg"
-          FlatGeobuf.write(df, s"$outDir/$name.fgb", name)
-          written += "fgb"
+        val parquetPath = s"$outDir/$name.parquet"
+        parquetZstd(dfFlat, parquetPath)
+        if (ParquetFooter.rowCount(df0.sparkSession, parquetPath) == 0) {
+          val p = new org.apache.hadoop.fs.Path(parquetPath)
+          p.getFileSystem(df0.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(p, true)
+          Some(name -> Seq("skipped:empty"))
+        } else {
+          val written = scala.collection.mutable.ArrayBuffer[String]("parquet")
+          if (df.columns.contains("geom")) {
+            geojsonSeq(df, s"$outDir/$name.geojsonl")
+            written += "geojsonl"
+            GeopackageWriter.write(df, s"$outDir/$name.gpkg", name)
+            written += "gpkg"
+            FlatGeobuf.write(df, s"$outDir/$name.fgb", name)
+            written += "fgb"
+          }
+          if (dfFlat.columns.contains("h3_cell")) {
+            csv(dfFlat, s"$outDir/$name.csv")
+            written += "csv"
+          }
+          Some(name -> written.toSeq)
         }
-        if (dfFlat.columns.contains("h3_cell")) {
-          csv(dfFlat, s"$outDir/$name.csv")
-          written += "csv"
-        }
-        Some(name -> written.toSeq)
       }
     }
   }

@@ -5,7 +5,11 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.format.{FileMetaData, KeyValue, Util}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
 
 /** Parquet footer key-value rewrite — the missing piece for REAL
   * GeoParquet output (`src/g_etl/export.py:259-281` writes the `geo`
@@ -17,6 +21,9 @@ import org.apache.parquet.format.{FileMetaData, KeyValue, Util}
   * the public read/write codec for it. So: deserialize the footer,
   * append the key-values, serialize back, and splice the new tail on —
   * row groups are untouched, so the rewrite is O(footer), not O(data).
+  *
+  * The same footers also carry each file's row count, which
+  * [[rowCount]] sums so writers can report rows without a Spark job.
   */
 object ParquetFooter {
 
@@ -80,6 +87,28 @@ object ParquetFooter {
     * store, run the same rewrite in a foreachPartition over file paths. */
   def addKeyValueToDir(dir: String, kvs: Map[String, String]): Unit =
     parquetParts(dir).foreach(addKeyValue(_, kvs))
+
+  /** Rows in a parquet output directory, summed from the part files'
+    * footers: no Spark job, no schema inference. Files and directories
+    * whose names start with `_` or `.` (`_SUCCESS`, `.crc` sidecars) are
+    * skipped, as Spark's file listing skips them; partition
+    * subdirectories are walked. Goes through the Hadoop FileSystem, so
+    * it works on any store Spark itself writes to. */
+  def rowCount(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new HPath(dir)
+    val fs = root.getFileSystem(conf)
+    def visible(p: HPath) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def count(p: HPath): Long =
+      fs.listStatus(p).iterator.filter(s => visible(s.getPath)).map { s =>
+        if (s.isDirectory) count(s.getPath)
+        else {
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+          try reader.getRecordCount finally reader.close()
+        }
+      }.sum
+    count(root)
+  }
 
   /** The .parquet part files of a Spark output directory (stream closed). */
   def parquetParts(dir: String): Seq[java.nio.file.Path] = {

@@ -163,6 +163,8 @@ class ExportRunnerSpec extends AnyFunSuite {
     assert(results("h3_only").contains("csv")) // geometry synthesized from cell
     assert(results("h3_only").contains("geojsonl"))
     assert(results("empty_t") == Seq("skipped:empty"))
+    assert(!Files.exists(Paths.get(s"$out/empty_t.parquet")),
+      "a skipped empty table leaves no parquet behind")
     assert(results("two_geoms") == Seq("skipped:multiple-geometry-columns"))
     // hex-only-at-exports: the internal long cell id must ship as the
     // lowercase hex form in EVERY format, not just csv (the parquet
